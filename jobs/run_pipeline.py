@@ -76,8 +76,6 @@ def main() -> None:
                     help="resume from checkpoint; --no-incremental disables "
                          "an 'Incremental yes' from --conf (explicit CLI "
                          "flags override the conf file in both directions)")
-    ap.add_argument("--skew-safe", action="store_true",
-                    help="use the range-partitioned sessionization path")
     ap.add_argument("--grok", default="split",
                     choices=["split", "regexp", "pandas", "multi"],
                     help="field-extraction strategy; 'multi' dispatches "
@@ -136,7 +134,7 @@ def main() -> None:
             df, ckpt, cfg.visit_timeout_s)
 
     res = run_pipeline(spark, tr, dims, cfg=cfg, grok_strategy=args.grok,
-                       skew_safe=args.skew_safe, sessionizer=sessionizer)
+                       sessionizer=sessionizer)
     counts = write_sinks(res, args.output)
     if ckpt is not None:
         save_state(res.enriched, ckpt)

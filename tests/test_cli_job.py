@@ -55,7 +55,11 @@ def test_cli_incremental_resume(tmp_path):
                        "--checkpoint", ckpt, "--incremental")
     assert f"{n_half} records" in stdout1
     with open(os.path.join(out1, "_metrics.json")) as f:
-        s1 = json.load(f)["sinks"]
+        met1 = json.load(f)
+    s1 = met1["sinks"]
+    # a first run has no checkpoint: the sampled estimator picks the path
+    assert met1["sessionize_path"] == "window"
+    assert 0 < met1["hottest_est"] < 100_000
     # every input row routes exactly once: ok spine (by_role) or errors
     assert s1["errors"] + s1["by_role"] == n_half
     with open(os.path.join(ckpt, "manifest.json")) as f:
@@ -69,7 +73,11 @@ def test_cli_incremental_resume(tmp_path):
                        "--checkpoint", ckpt, "--incremental")
     assert f"{n_total - n_half} records" in stdout2
     with open(os.path.join(out2, "_metrics.json")) as f:
-        s2 = json.load(f)["sinks"]
+        met2 = json.load(f)
+    s2 = met2["sinks"]
+    # a resumed run stitches onto the saved state; no estimate is taken
+    assert met2["sessionize_path"] == "resume"
+    assert met2["hottest_est"] is None
     assert s2["errors"] + s2["by_role"] == n_total - n_half
     with open(os.path.join(ckpt, "manifest.json")) as f:
         m2 = json.load(f)

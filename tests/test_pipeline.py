@@ -100,9 +100,15 @@ def test_entry_exit_reports(result, oracle):
 
 def test_skew_safe_pipeline_equivalence(spark, transcripts, dims, result):
     """Salting/skew path on vs off -> identical report tables (SURVEY §5.2
-    prop d)."""
-    res2 = run_pipeline(spark, transcripts, dims, skew_safe=True)
+    prop d). A threshold of 1 turn forces the sampled estimator onto the
+    skew path; the default threshold keeps the fixture on the window."""
+    from webalizer_spark.config import EngineConfig
+
+    assert result.sessionize_path == "window"
+    res2 = run_pipeline(spark, transcripts, dims,
+                        cfg=EngineConfig(hot_conv_threshold=1))
     try:
+        assert res2.sessionize_path == "skew"
         for name in ["daily", "status_codes", "top_tools", "top_entry"]:
             a = result.reports[name].toPandas()
             b = res2.reports[name].toPandas()
@@ -114,19 +120,24 @@ def test_skew_safe_pipeline_equivalence(spark, transcripts, dims, result):
 
 
 def test_auto_skew_selection_and_metrics(spark, transcripts, dims, tmp_path):
-    """skew_safe='auto' routes via cfg.hot_conv_threshold; write_sinks
-    emits the per-partition lineage metrics manifest."""
+    """The sampled estimator routes via cfg.hot_conv_threshold; write_sinks
+    records the path it took and emits the per-partition lineage metrics
+    manifest."""
     import json
     from webalizer_spark.config import EngineConfig
     from webalizer_spark.plans.pipeline import write_sinks
 
     cfg = EngineConfig(hot_conv_threshold=100)   # fixture has >100-turn convs
-    res = run_pipeline(spark, transcripts, dims, cfg=cfg, skew_safe="auto")
+    res = run_pipeline(spark, transcripts, dims, cfg=cfg)
     try:
+        assert res.sessionize_path == (
+            "skew" if res.hottest_est >= 100 else "window")
         out = str(tmp_path / "sinks")
         counts = write_sinks(res, out)
         m = json.load(open(f"{out}/_metrics.json"))
         assert m["sinks"] == {k: int(v) for k, v in counts.items()}
+        assert m["sessionize_path"] == res.sessionize_path
+        assert m["hottest_est"] == res.hottest_est
         assert sum(p["rows"] for p in m["spine_partitions"]) == \
             int(counts["by_role"])
         assert all("bytes" in p for p in m["spine_partitions"])

@@ -223,3 +223,46 @@ def test_dedup_keep_anti_join_broadcasts_small_drop_set(spark):
     plan = kept._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"BroadcastHashJoin.*LeftAnti", plan), plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_fixture_read_widens_only_unsplittable_single_files(spark, tmp_path):
+    """queries._t adds a round-robin Exchange only for a single parquet
+    FILE over 256 KB whose row groups are fewer than the cores; a
+    multi-file `<name>.parquet` directory (a production table) already
+    scans wide and must keep its plan untouched."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from webalizer_spark.queries import _AUTO_WIDE, _t
+
+    name = "documents"
+    assert name in _AUTO_WIDE
+    rng = np.random.default_rng(0)
+    # incompressible payload so the file clears the 256 KB floor
+    table = pa.table({
+        "doc_id": pa.array(np.arange(4000, dtype=np.int64)),
+        "text": pa.array([rng.bytes(96).hex() for _ in range(4000)]),
+    })
+
+    many = tmp_path / "many"
+    (many / f"{name}.parquet").mkdir(parents=True)
+    for i, part in enumerate(table.to_batches(max_chunksize=1000)):
+        pq.write_table(pa.Table.from_batches([part]),
+                       many / f"{name}.parquet" / f"part-{i}.parquet")
+    plan = _plan(_t(spark, str(many), name))
+    assert "Exchange" not in plan, plan
+
+    one = tmp_path / "one"
+    one.mkdir()
+    path = one / f"{name}.parquet"
+    pq.write_table(table, path, row_group_size=len(table))
+    assert os.path.getsize(path) > (1 << 18)
+    assert pq.ParquetFile(path).num_row_groups == 1
+    plan = _plan(_t(spark, str(one), name))
+    if spark.sparkContext.defaultParallelism > 1:
+        assert "RoundRobinPartitioning" in plan, plan
+    else:   # one core: a single row group already matches the cores
+        assert "Exchange" not in plan, plan

@@ -162,26 +162,6 @@ def test_second_incremental_run_preserves_prior_state(spark, parsed_ok):
             ref_daily[c].astype("int64").tolist(), c
 
 
-def test_resume_sessionize_skew_safe_matches_window(spark, parsed_ok, halves):
-    """Resume composes with the range-partitioned skew path: identical
-    per-row output to the window path."""
-    from webalizer_spark.operators.sessionize import release_skew_caches
-
-    first, second = halves
-    shutil.rmtree(CKPT, ignore_errors=True)
-    ckpt = CheckpointPaths(CKPT)
-    save_state(sessionize(first), ckpt)
-
-    cols = ["conv_id", "turn_idx", "is_new_session", "session_seq"]
-    new = resume_filter(parsed_ok, ckpt)
-    a = (resume_sessionize(new, ckpt).select(*cols).toPandas()
-         .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    b = (resume_sessionize(new, ckpt, skew_safe=True).select(*cols).toPandas()
-         .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    release_skew_caches()
-    assert a.equals(b)
-
-
 def test_skew_cache_released(spark, parsed_ok):
     """sessionize_skew_safe registers its ranged cache; release drops it."""
     from webalizer_spark.operators.sessionize import (

@@ -16,8 +16,9 @@ Layout:
   datagen.py            deterministic synthetic transcript generator (FIXTURES.md)
   sources/              table-format shim (Iceberg on cluster, parquet locally)
   functions/            grok parser + scalar function library
-  operators/            sessionize, enrich, filters, aggregates, topn,
-                        dedup, similarity, textstats, multimodal
+  operators/            parse, sessionize, enrich, filters, aggregates, topn,
+                        dedup, similarity, equality, quality, sampling, bpe,
+                        multimodal
   plans/                end-to-end pipeline + checkpoint/resume
   streaming/            Structured Streaming twins (session_window)
 """

@@ -90,8 +90,9 @@ class EngineConfig:
     dumps: tuple[str, ...] = ()
     # Field caps (MAXHOST/MAXURL/... in webalizer.h): bound adversarial rows.
     max_field_len: int = 4096
-    # Skew handling: convs with more turns than this take the
-    # range-partitioned skew-safe sessionization path (SURVEY §4 O9).
+    # Skew handling: when run_pipeline's 1% sample estimates a conv at
+    # this many turns or more, it takes the range-partitioned skew-safe
+    # sessionization path (SURVEY §4 O9).
     hot_conv_threshold: int = 100_000
     # Streaming watermark (chronology-check analog, SURVEY §2.9).
     late_data_watermark: str = "30 minutes"

@@ -4,17 +4,14 @@ subframes with Rice-coded residuals, mono 16-bit.
 Implements the public FLAC format spec (RFC 9639 / xiph.org format.html)
 from scratch — the multimodal fixture's audio rows can ship REAL .flac
 payloads and the Spark decode path walks genuine frames, mirroring the
-PNG (RFC 2083) and baseline-JPEG (ITU T.81) codecs in this package.
-FLAC is lossless, so round-trips are asserted bit-exact (unlike the
-PSNR-bounded JPEG).
+PNG (RFC 2083) codec in this package. FLAC is lossless, so round-trips
+are asserted bit-exact.
 
 Supported on decode: mono streams, 8/16/24-bit samples, CONSTANT,
 VERBATIM and FIXED(0-4) subframes, any Rice partition order, both 4- and
 5-bit Rice parameter widths, escape partitions, wasted bits; frame CRC-8
 / CRC-16 and the STREAMINFO sample-MD5 are verified. LPC subframes and
-multichannel raise ValueError (honest refusal -> corrupt routing), which
-shrinks the external-library stub to color/progressive JPEG and
-compressed video only.
+multichannel raise ValueError (honest refusal -> corrupt routing).
 
 The reference never decodes media; this implements SURVEY §2.11's
 multimodal-column surface (decode stage of the binary-payload contract).

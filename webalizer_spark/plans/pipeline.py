@@ -64,6 +64,11 @@ class PipelineResult:
     reports: dict[str, DataFrame] = field(default_factory=dict)
     parsed: DataFrame | None = None
     cached_aggs: list[DataFrame] = field(default_factory=list)
+    # which sessionizer ran: "window", "skew" (chosen by the sampled
+    # hottest-conv estimate) or "resume" (caller-supplied sessionizer,
+    # no estimate taken, so hottest_est stays None)
+    sessionize_path: str = "window"
+    hottest_est: int | None = None
 
     def unpersist(self) -> None:
         from webalizer_spark.operators.sessionize import release_skew_caches
@@ -82,7 +87,6 @@ def run_pipeline(
     dims: dict[str, DataFrame],
     cfg: EngineConfig = DEFAULT_CONFIG,
     grok_strategy: str = "split",
-    skew_safe: bool = False,
     persist_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     sessionizer=None,
 ) -> PipelineResult:
@@ -155,25 +159,23 @@ def run_pipeline(
     # sessionizer override: resume mode passes a checkpoint-stitching
     # variant (plans/checkpoint.resume_sessionize) so numbering continues
     # the saved state
-    if sessionizer is None:
-        use_skew = skew_safe
-        if skew_safe == "auto":
-            # a seeded 1% sample estimates the hottest conv instead of
-            # the old exact full groupBy pre-pass (round-6 verdict item
-            # 4): at scale the exact pass was an extra full shuffle
-            # before any work started, and the decision only needs an
-            # order-of-magnitude signal — a conv at the default 100k
-            # threshold lands ~1k sampled rows. Both sessionize paths
-            # produce identical output (property-tested), so estimator
-            # noise can only flip WHICH physical plan runs, never the
-            # result; the seed keeps a given input deterministic.
-            hottest = ((ok.sample(fraction=0.01, seed=7)
-                        .groupBy("conv_id").count()
-                        .agg(F.max("count")).collect()[0][0]) or 0) * 100
-            use_skew = hottest >= cfg.hot_conv_threshold
-        sessionizer = lambda df: (  # noqa: E731
-            sessionize_skew_safe if use_skew else sessionize)(
-            df, cfg.visit_timeout_s)
+    if sessionizer is not None:
+        path, hottest = "resume", None
+    else:
+        # the data picks the path: a seeded 1% sample estimates the
+        # hottest conv instead of an exact full groupBy pre-pass, which
+        # at scale was an extra full shuffle before any work started.
+        # The decision only needs an order-of-magnitude signal: a conv
+        # at the default 100k threshold lands ~1k sampled rows. Both
+        # sessionize paths produce identical output (property-tested),
+        # so estimator noise can only flip WHICH physical plan runs,
+        # never the result; the seed keeps a given input deterministic.
+        hottest = ((ok.sample(fraction=0.01, seed=7)
+                    .groupBy("conv_id").count()
+                    .agg(F.max("count")).collect()[0][0]) or 0) * 100
+        path = "skew" if hottest >= cfg.hot_conv_threshold else "window"
+        local = sessionize_skew_safe if path == "skew" else sessionize
+        sessionizer = lambda df: local(df, cfg.visit_timeout_s)  # noqa: E731
     sess = sessionizer(ok)
 
     # -- ENRICH (post-window, narrow broadcast joins) ---------------------
@@ -295,6 +297,7 @@ def run_pipeline(
         enriched=spine, errors=errors, tool_calls=tool_calls,
         by_role=by_role, reports=reports, parsed=parsed,
         cached_aggs=[sess_pages, per_site, per_url],
+        sessionize_path=path, hottest_est=hottest,
     )
 
 
@@ -346,6 +349,8 @@ def write_sinks(result: PipelineResult, out_base: str) -> dict[str, int]:
                 .collect())
     metrics = {
         "sinks": {k: int(v) for k, v in counts.items()},
+        "sessionize_path": result.sessionize_path,
+        "hottest_est": result.hottest_est,
         "spine_partitions": [
             {"partition_id": r["partition_id"], "rows": r["rows"],
              "bytes": int(r["bytes"] or 0)} for r in per_part],
